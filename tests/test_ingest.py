@@ -5,6 +5,7 @@ from __future__ import annotations
 import zipfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tpg_weather_etl_spark.ingest.gtfs import ingest_gtfs
@@ -94,17 +95,30 @@ def test_istdaten_dedupe_deterministic_on_exact_ties(spark, tmp_path):
     assert winners == {"A"}  # H2: tiebreak on stop_name asc, stable
 
 
-def test_month_partitioned_overwrite_only_touches_present_months(spark, tmp_path):
-    out = tmp_path / "silver"
-    d1 = spark.createDataFrame(
-        [("2024-01-05", 1), ("2024-02-05", 2)], "service_date string, v int"
-    ).withColumn("service_date", F.to_date("service_date"))
-    write_month_partitioned(d1, out)
-    # second batch: only february, new value → january must survive
-    d2 = spark.createDataFrame(
-        [("2024-02-20", 99)], "service_date string, v int"
-    ).withColumn("service_date", F.to_date("service_date"))
-    write_month_partitioned(d2, out)
+@pytest.mark.parametrize("session_mode", ["static", "dynamic"])
+def test_month_partitioned_overwrite_only_touches_present_months(
+        spark, tmp_path, session_mode):
+    # The sink's scope must not depend on the session it is handed (an
+    # externally created session may carry either overwrite mode), and
+    # the write must leave that session setting as it found it.
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, session_mode)
+    try:
+        out = tmp_path / "silver"
+        d1 = spark.createDataFrame(
+            [("2024-01-05", 1), ("2024-02-05", 2)],
+            "service_date string, v int",
+        ).withColumn("service_date", F.to_date("service_date"))
+        write_month_partitioned(d1, out)
+        # second batch: only february, new value → january must survive
+        d2 = spark.createDataFrame(
+            [("2024-02-20", 99)], "service_date string, v int"
+        ).withColumn("service_date", F.to_date("service_date"))
+        write_month_partitioned(d2, out)
+        assert spark.conf.get(key) == session_mode
+    finally:
+        spark.conf.set(key, prev)
     got = {(r.month, r.v) for r in spark.read.parquet(str(out)).collect()}
     assert got == {("2024-01", 1), ("2024-02", 99)}
 
@@ -172,6 +186,28 @@ def test_weather_range_upsert(spark, tmp_path):
            for r in spark.read.parquet(str(tgt)).collect()}
     # GVE@08 replaced; GVE@09 outside incoming range → survives; XYZ intact
     assert got == {("GVE", 8, 100.0), ("GVE", 9, 2.0), ("XYZ", 8, 9.0)}
+
+
+def test_weather_range_upsert_refuses_unreadable_target(spark, tmp_path):
+    """Only a missing target may start a new table: a torn part file
+    must fail the upsert, not let the batch replace the station rows
+    already on disk."""
+    tgt = tmp_path / "obs"
+    old = spark.createDataFrame(
+        [("AAA", "2024-01-01 08:00:00", 1.0)],
+        "station_id string, ts_utc string, temp_c double",
+    ).withColumn("ts_utc", F.to_timestamp("ts_utc"))
+    upsert_station_range(spark, tgt, old.coalesce(1))
+    (valid,) = tgt.glob("part-*.parquet")
+    # sorts before the valid part, so schema inference reads it first
+    (tgt / "part-0-torn.parquet").write_bytes(b"PAR1\x00\x01torn")
+    new = spark.createDataFrame(
+        [("BBB", "2024-01-01 08:00:00", 2.0)],
+        "station_id string, ts_utc string, temp_c double",
+    ).withColumn("ts_utc", F.to_timestamp("ts_utc"))
+    with pytest.raises(Py4JJavaError, match="part-0-torn"):
+        upsert_station_range(spark, tgt, new)
+    assert valid.exists()
 
 
 def _gtfs_zip(tmp_path):

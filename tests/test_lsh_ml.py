@@ -148,6 +148,19 @@ def test_ivf_index_at_rest_prunes_to_probed_cells(spark, tmp_path):
     assert n_all == assign.count()
 
 
+def test_ivf_index_rebuild_drops_cells_absent_from_it(spark, tmp_path):
+    from tpg_weather_etl_spark.operators.lsh_ml import write_ivf_index
+
+    idx = str(tmp_path / "ivf")
+    schema = "vec_id int, cell int"
+    write_ivf_index(
+        spark.createDataFrame([(1, 0), (2, 1), (3, 2)], schema), idx)
+    write_ivf_index(spark.createDataFrame([(1, 0), (2, 1)], schema), idx)
+    got = sorted(tuple(r) for r in
+                 spark.read.parquet(idx).select("vec_id", "cell").collect())
+    assert got == [(1, 0), (2, 1)]
+
+
 SF_DIR_01 = "/root/testdata/sf0.01"
 
 

@@ -33,22 +33,15 @@ from tpg_weather_etl_spark.functions.time import (
 _DAY_US = 86_400 * 1_000_000
 
 
-def _rolling_median(days: int) -> F.Column:
-    return F.expr("percentile(delay_depart_sec, 0.5)")
-
-
 def build_training_rows(
     features_events: DataFrame,
     weather: DataFrame,
-    holidays: list[str] | None = None,
-    routes: DataFrame | None = None,
 ) -> DataFrame:
     """Assemble per-event training rows (DDL common.py:174-193).
 
-    ``routes``: optional (route_id, line_text) lookup (GTFS routes,
-    route_short_name = line_text) to populate the DDL's route_id;
-    NULL when absent — the reference's builder 12 is documented but
-    unshipped, so the linkage source is our call.
+    The DDL's ``route_id`` is NULL and ``is_holiday`` false: the
+    reference's builder 12 is documented but unshipped, and no
+    route linkage or holiday calendar feeds it.
     """
     ev = features_events.filter(F.col("sched_ts").isNotNull()).select(
         "service_date", "line_text", "stop_code", "stop_name",
@@ -58,6 +51,12 @@ def build_training_rows(
         "sched_bin", "station_id",
     ).withColumn("row_id", F.monotonically_increasing_id())
 
+    # Targets and rolling medians share one (line, stop) time order.
+    line_stop_w = (
+        Window.partitionBy("line_text", "stop_code")
+        .orderBy(epoch_us(F.col("ts_event")))
+    )
+
     # Targets (DDL common.py:183-184): builder 12 is absent from the
     # reference, so we define the label precisely: target_late2m_h is
     # whether the latest departure of this (line, stop) scheduled in
@@ -65,29 +64,21 @@ def build_training_rows(
     # stop at forecast horizon h. NULL when no departure falls in the
     # horizon (or its delay is unknown). The two horizons genuinely
     # differ: +30 sees departures +15 cannot.
-    tw = (
-        Window.partitionBy("line_text", "stop_code")
-        .orderBy(epoch_us(F.col("ts_event")))
-    )
     for mins in (15, 30):
         ev = ev.withColumn(
             f"target_late2m_{mins}",
             F.last("delay_depart_sec").over(
-                tw.rangeBetween(1, mins * 60 * 1_000_000)
+                line_stop_w.rangeBetween(1, mins * 60 * 1_000_000)
             ) >= 120,
         )
 
     # W3: rolling medians over trailing windows per (line, stop); frame
     # excludes the current day's value leaking: range up to -1 µs.
-    base_w = (
-        Window.partitionBy("line_text", "stop_code")
-        .orderBy(epoch_us(F.col("ts_event")))
-    )
     for days in (7, 14, 28):
         ev = ev.withColumn(
             f"med_delay_{days}d_sec",
-            _rolling_median(days).over(
-                base_w.rangeBetween(-days * _DAY_US, -1)
+            F.expr("percentile(delay_depart_sec, 0.5)").over(
+                line_stop_w.rangeBetween(-days * _DAY_US, -1)
             ).cast("int"),  # DDL common.py:185-187 declares INT
         )
 
@@ -97,10 +88,7 @@ def build_training_rows(
         .withColumn("hour", F.hour("ts_event"))
         .withColumn("minute_bin",
                     (F.minute("ts_event") - F.minute("ts_event") % 10))
-        .withColumn("is_holiday",
-                    F.to_date("ts_event").cast("string")
-                    .isin(holidays or []) if holidays
-                    else F.lit(False))
+        .withColumn("is_holiday", F.lit(False))
         .withColumn("sin_hour", cyclic_hour_sin(F.col("hour")))
         .withColumn("cos_hour", cyclic_hour_cos(F.col("hour")))
     )
@@ -123,18 +111,10 @@ def build_training_rows(
         "left",
     ).drop(w["station_id"]).drop("ts_utc")
 
-    if routes is not None:
-        out = out.join(
-            F.broadcast(routes.select("route_id", "line_text")
-                        .dropDuplicates(["line_text"])),
-            "line_text", "left",
-        )
-    else:
-        out = out.withColumn("route_id", F.lit(None).cast("string"))
-
     # column order & names exactly per DDL common.py:174-193
     return out.select(
-        "row_id", "service_date", "route_id", "line_text",
+        "row_id", "service_date",
+        F.lit(None).cast("string").alias("route_id"), "line_text",
         F.col("stop_code").alias("stop_id"), "stop_name",
         "ts_event", "target_late2m_15", "target_late2m_30",
         "delay_depart_sec", "med_delay_7d_sec", "med_delay_14d_sec",

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tpg_weather_etl_spark.sources.writers import write_parquet
+
 
 def minhash_neardup_pairs(
     docs: DataFrame,
@@ -127,7 +129,8 @@ def write_ivf_index(
     cell_col: str = "cell",
 ) -> None:
     """Persist an IVF index at rest: the (vector, cell) assignment
-    table written partitioned by cell — the inverted-list layout.
+    table written partitioned by cell — the inverted-list layout. A
+    rebuild replaces the whole index, cells absent from it included.
 
     This is what makes IVF an *index* rather than a per-query
     computation: probing nprobe cells becomes a partition-pruned scan
@@ -135,10 +138,7 @@ def write_ivf_index(
     corpus from disk and nothing else. Combine with ``write_sorted``
     inside each cell for row-group pruning on secondary keys.
     """
-    (assignments.write.mode("overwrite")
-     .option("compression", "zstd")
-     .partitionBy(cell_col)
-     .parquet(str(path)))
+    write_parquet(assignments, path, partition_by=cell_col)
 
 
 def probe_ivf_index(spark, path: str, cells: list[int],

@@ -54,12 +54,6 @@ def read_gtfs_csv(spark: SparkSession, path: str | Path) -> DataFrame:
     )
 
 
-def read_parquet_shards(spark: SparkSession,
-                        paths: Sequence[str | Path]) -> DataFrame:
-    """Multi-shard parquet read = implicit UNION ALL (ref S8)."""
-    return spark.read.parquet(*[str(p) for p in paths])
-
-
 def ensure_columns(
     df: DataFrame,
     required: Sequence[str],

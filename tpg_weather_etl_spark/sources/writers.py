@@ -3,13 +3,13 @@
 The reference's transactional DELETE+INSERT upserts against DuckDB
 become partition-layout operations on a parquet lake:
 
-- K2/K5 month-wise overwrite → ``partitionBy("month")`` + dynamic
-  partition overwrite: writing only the months present in the incoming
-  batch replaces exactly those directories, atomically per partition —
-  the index-drop/checkpoint-suppression tuning of the reference
+- K2/K5 month-wise overwrite → ``partitionBy("month")`` written by
+  ``replace_partitions``: only the months present in the incoming
+  batch are replaced, atomically per partition — the index-drop/
+  checkpoint-suppression tuning of the reference
   (02_ingest_istdaten.py:459-473) has no analogue because there is
   nothing to maintain.
-- K4 feed_version overwrite → same mechanism on ``feed_version=``.
+- K4 feed_version overwrite → same sink on ``feed_version=``.
 - K6 per-station time-range overwrite (03_ingest_weather.py:245-286)
   has no partition alignment, so it is expressed as the reference's
   own algebra: anti-join the existing table against the incoming
@@ -18,59 +18,58 @@ become partition-layout operations on a parquet lake:
 At cluster scale K6 would be a Delta/Iceberg ``MERGE``/replaceWhere;
 the anti-join form here is engine-pure and produces the identical
 table state.
+
+Overwrite scope is a per-write option, never session conf: K2/K4/K5
+go through ``replace_partitions`` (dynamic partition overwrite set on
+the writer), every other parquet sink through ``write_parquet``
+(static: the whole target is replaced). No writer touches session
+conf, so the result does not depend on how the session was created.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from tpg_weather_etl_spark.functions.time import month_key
 
 
-def write_parquet(df: DataFrame, path: str | Path, mode: str = "overwrite",
-                  compression: str = "zstd") -> None:
-    """Plain parquet sink (K1/K3); zstd matches the reference gold
-    outputs (10_build_features.py:294)."""
-    df.write.mode(mode).option("compression", compression).parquet(str(path))
+def _parquet_writer(df: DataFrame, partition_by: str | list[str] | None,
+                    overwrite_mode: str) -> DataFrameWriter:
+    """zstd matches the reference gold outputs
+    (10_build_features.py:294)."""
+    w = (df.write.mode("overwrite")
+         .option("compression", "zstd")
+         .option("partitionOverwriteMode", overwrite_mode))
+    return w.partitionBy(partition_by) if partition_by else w
+
+
+def write_parquet(df: DataFrame, path: str | Path,
+                  partition_by: str | list[str] | None = None) -> None:
+    """Parquet sink (K1/K3) that replaces the whole target, including
+    partitions absent from ``df``."""
+    _parquet_writer(df, partition_by, "static").parquet(str(path))
+
+
+def replace_partitions(df: DataFrame, path: str | Path,
+                       partition_by: str | list[str]) -> None:
+    """Partitioned parquet sink that replaces only the partition values
+    present in ``df``; every other partition under ``path`` survives
+    (K2/K4/K5)."""
+    _parquet_writer(df, partition_by, "dynamic").parquet(str(path))
 
 
 def write_month_partitioned(
     df: DataFrame,
     path: str | Path,
     date_col: str = "service_date",
-    overwrite_partitions: bool = True,
 ) -> None:
-    """Hive-style ``month=YYYY-MM/`` sink with dynamic overwrite
-    (K2+K5). Only months present in ``df`` are replaced."""
-    out = df.withColumn("month", month_key(F.col(date_col)))
-    mode = "overwrite" if overwrite_partitions else "append"
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (out.write.mode(mode)
-            .option("compression", "zstd")
-            .partitionBy("month")
-            .parquet(str(path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def write_feed_version_partitioned(df: DataFrame, path: str | Path) -> None:
-    """K4: feed_version-scoped overwrite (01_ingest_gtfs.py:237-270)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (df.write.mode("overwrite")
-           .option("compression", "zstd")
-           .partitionBy("feed_version")
-           .parquet(str(path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Hive-style ``month=YYYY-MM/`` sink (K2+K5). Only months present
+    in ``df`` are replaced."""
+    replace_partitions(df.withColumn("month", month_key(F.col(date_col))),
+                       path, "month")
 
 
 def export_csv(df: DataFrame, path: str | Path,
@@ -97,31 +96,33 @@ def upsert_station_range(
     range, then INSERT all incoming rows — as one read-modify-write.
     """
     target_path = str(target_path)
+    fs, p = _hadoop_fs(spark, target_path)
+    # Only a missing path starts a new table: an unreadable one must
+    # raise, not be overwritten with the incoming batch alone.
+    if not fs.exists(p):
+        write_parquet(incoming, target_path)
+        return
     incoming = incoming.cache()
     try:
         existing = spark.read.parquet(target_path)
-    except Exception:
-        existing = None
-    if existing is None:
-        write_parquet(incoming, target_path)
-        incoming.unpersist()
-        return
-    bounds = incoming.groupBy(station_col).agg(
-        F.min(ts_col).alias("__tmin"), F.max(ts_col).alias("__tmax")
-    )
-    kept = (
-        existing.join(
-            F.broadcast(bounds),
-            on=(
-                (existing[station_col] == bounds[station_col])
-                & existing[ts_col].between(F.col("__tmin"), F.col("__tmax"))
-            ),
-            how="left_anti",
+        bounds = incoming.groupBy(station_col).agg(
+            F.min(ts_col).alias("__tmin"), F.max(ts_col).alias("__tmax")
         )
-    )
-    merged = kept.unionByName(incoming).localCheckpoint()
-    write_parquet(merged, target_path)
-    incoming.unpersist()
+        kept = (
+            existing.join(
+                F.broadcast(bounds),
+                on=(
+                    (existing[station_col] == bounds[station_col])
+                    & existing[ts_col].between(F.col("__tmin"),
+                                               F.col("__tmax"))
+                ),
+                how="left_anti",
+            )
+        )
+        merged = kept.unionByName(incoming).localCheckpoint()
+        write_parquet(merged, target_path)
+    finally:
+        incoming.unpersist()
 
 
 def write_bucketed(
@@ -293,8 +294,7 @@ def compact_parquet(
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(str(path))
     staging = path.with_name(path.name + "__compacting")
-    (df.repartition(n_files).write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(staging)))
+    write_parquet(df.repartition(n_files), staging)
     import shutil
     backup = path.with_name(path.name + "__precompact")
     path.rename(backup)
@@ -320,10 +320,8 @@ def write_sorted(
     """
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
-    (df.repartitionByRange(n, *sort_cols)
-       .sortWithinPartitions(*sort_cols)
-       .write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(path)))
+    write_parquet(df.repartitionByRange(n, *sort_cols)
+                  .sortWithinPartitions(*sort_cols), path)
 
 
 ZORDER_BITS = 8   # per-dimension resolution: 2^8 buckets → 16-bit key
@@ -385,12 +383,10 @@ def write_zordered(
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     z = zorder_key(df, cols)
-    (df.withColumn("__z", z)
-       .repartitionByRange(n, "__z")
-       .sortWithinPartitions("__z")
-       .drop("__z")
-       .write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(path)))
+    write_parquet(df.withColumn("__z", z)
+                  .repartitionByRange(n, "__z")
+                  .sortWithinPartitions("__z")
+                  .drop("__z"), path)
 
 
 def refresh_months(
@@ -418,15 +414,7 @@ def refresh_months(
         months = [r.month for r in src_m.select("month").distinct().collect()]
     subset = src_m.filter(F.col("month").isin(months)).drop("month")
     out = build(subset).withColumn("month", month_key(F.col(date_col)))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (out.write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("month")
-            .parquet(str(gold_path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    replace_partitions(out, gold_path, "month")
     return sorted(months)
 
 

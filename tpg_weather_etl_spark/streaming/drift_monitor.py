@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpg_weather_etl_spark.functions.text import norm_text
+from tpg_weather_etl_spark.sources.writers import replace_partitions
 
 DRIFT_TOP = 50
 DRIFT_ALERT_KL = 0.15
@@ -171,9 +172,7 @@ def start_drift_monitor(stream: DataFrame, baseline: DataFrame,
             "source", "n_top_tokens", "kl",
             (F.col("kl") >= alert_kl).alias("alert"),
         )
-        (out.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_dir))
+        replace_partitions(out, out_dir, "batch_id")
 
     return (
         stream.writeStream.foreachBatch(score)
