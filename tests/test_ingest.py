@@ -2,13 +2,14 @@
 
 from __future__ import annotations
 
+import uuid
 import zipfile
 
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from tpg_weather_etl_spark.ingest.gtfs import ingest_gtfs
+from tpg_weather_etl_spark.ingest.gtfs import detect_feed_version, ingest_gtfs
 from tpg_weather_etl_spark.ingest.istdaten import (
     dedupe_istdaten,
     normalize_istdaten,
@@ -17,7 +18,11 @@ from tpg_weather_etl_spark.ingest.weather import (
     dedupe_weather,
     normalize_weather,
 )
-from tpg_weather_etl_spark.sources.readers import read_semicolon_csv
+from tpg_weather_etl_spark.sources.readers import (
+    ensure_columns,
+    read_gtfs_csv,
+    read_semicolon_csv,
+)
 from tpg_weather_etl_spark.sources.staging import (
     month_from_filename,
     stage_zip_members,
@@ -27,7 +32,14 @@ from tpg_weather_etl_spark.sources.writers import (
     upsert_station_range,
     write_month_partitioned,
 )
-from tpg_weather_etl_spark.schemas import IST_COLMAP, WEATHER_COLMAP
+from tpg_weather_etl_spark.schemas import (
+    GTFS_ROUTES,
+    GTFS_STOP_TIMES,
+    GTFS_STOPS,
+    GTFS_TRIPS,
+    IST_COLMAP,
+    WEATHER_COLMAP,
+)
 
 IST_HEADER = ";".join(IST_COLMAP.keys())
 
@@ -213,7 +225,8 @@ def test_weather_range_upsert_refuses_unreadable_target(spark, tmp_path):
 def _gtfs_zip(tmp_path):
     z = tmp_path / "gtfs_2024-02.zip"
     files = {
-        "agency.txt": "agency_id,agency_name\n"
+        # members are staged as raw bytes: the BOM reaches the reader
+        "agency.txt": "\ufeffagency_id,agency_name\n"
                       "tpg,Transports Publics Genevois (TPG)\n"
                       "sbb,Swiss Federal Railways\n",
         "routes.txt": "route_id,route_type,route_short_name,agency_id\n"
@@ -235,22 +248,150 @@ def _gtfs_zip(tmp_path):
     return z
 
 
+GTFS_WAREHOUSE = {"gtfs_routes": GTFS_ROUTES, "gtfs_trips": GTFS_TRIPS,
+                  "gtfs_stop_times": GTFS_STOP_TIMES,
+                  "gtfs_stops": GTFS_STOPS}
+
+
 def test_gtfs_cascade_and_feed_version(spark, tmp_path):
     z = _gtfs_zip(tmp_path)
-    out = ingest_gtfs(spark, z, tmp_path / "staging", tmp_path / "wh")
-    routes = {r.route_id for r in out["gtfs_routes"].collect()}
-    assert routes == {"r1", "r3"}  # operator filter, case-insensitive
-    trips = {r.trip_id for r in out["gtfs_trips"].collect()}
-    assert trips == {"t1", "t3"}
-    sts = out["gtfs_stop_times"].collect()
+    counts = ingest_gtfs(spark, z, tmp_path / "staging", tmp_path / "wh")
+    wh = {name: spark.read.schema(schema)
+          .parquet(str(tmp_path / "wh" / name)).collect()
+          for name, schema in GTFS_WAREHOUSE.items()}
+    assert counts == {name: len(rows) for name, rows in wh.items()}
+    assert {r.route_id for r in wh["gtfs_routes"]} == {"r1", "r3"}  # operator filter, case-insensitive
+    assert {r.trip_id for r in wh["gtfs_trips"]} == {"t1", "t3"}
+    sts = wh["gtfs_stop_times"]
     assert {r.trip_id for r in sts} == {"t1"}
     assert "25:10:00" in {r.arrival_time_planned for r in sts}  # text >24h
-    stops = {r.stop_id for r in out["gtfs_stops"].collect()}
-    assert stops == {"s_a", "s_b"}
-    assert out["gtfs_routes"].collect()[0].feed_version == "2024-02-15"
+    assert {r.stop_id for r in wh["gtfs_stops"]} == {"s_a", "s_b"}
+    # the declared schema keeps the partition value TEXT, not a DATE
+    assert {r.feed_version for rows in wh.values() for r in rows} \
+        == {"2024-02-15"}
     # warehouse written with feed_version= partition dirs
     assert (tmp_path / "wh" / "gtfs_routes" /
             "feed_version=2024-02-15").exists()
+
+
+def test_gtfs_cascade_reads_only_its_own_feed(spark, tmp_path):
+    """A second feed in the same warehouse neither leaks into nor is
+    touched by the cascade of the first."""
+    older = _gtfs_zip(tmp_path)
+    with zipfile.ZipFile(older) as zf:
+        members = {n: zf.read(n) for n in zf.namelist()}
+    members["trips.txt"] += b"t9,r2,s1\n"
+    members["feed_info.txt"] = b"feed_version\n2024-01-01\n"
+    newer = tmp_path / "gtfs_2024-01.zip"
+    with zipfile.ZipFile(newer, "w") as zf:
+        for name, content in members.items():
+            zf.writestr(name, content)
+    wh = tmp_path / "wh"
+    ingest_gtfs(spark, older, tmp_path / "s1", wh)
+    counts = ingest_gtfs(spark, newer, tmp_path / "s2", wh,
+                         operator_pattern="swiss federal")
+    trips = spark.read.schema(GTFS_TRIPS).parquet(str(wh / "gtfs_trips"))
+    by_feed = {}
+    for r in trips.collect():
+        by_feed.setdefault(r.feed_version, set()).add(r.trip_id)
+    assert by_feed == {"2024-02-15": {"t1", "t3"},
+                       "2024-01-01": {"t2", "t9"}}
+    assert counts["gtfs_stop_times"] == 1       # t2's one stop time
+    stops = spark.read.schema(GTFS_STOPS).parquet(str(wh / "gtfs_stops"))
+    assert {r.stop_id for r in stops.filter("feed_version = '2024-01-01'")
+            .collect()} == {"s_c"}
+
+
+def test_gtfs_reader_header_edge_cases(spark, tmp_path):
+    """The header read on the driver names and fills the columns as
+    Spark's own header parsing does."""
+    cases = {
+        "plain": b"agency_id,agency_name\ntpg,TPG\n",
+        "bom": b"\xef\xbb\xbfagency_id,agency_name\ntpg,TPG\n",
+        "quoted": b'"agency_id","agency, name"\ntpg,"T,PG"\n',
+        "unnamed_and_repeated": b"a,,A,b\n1,2,3,4\n",
+    }
+    for name, data in cases.items():
+        p = tmp_path / f"{name}.txt"
+        p.write_bytes(data)
+        want = spark.read.option("header", "true").csv(str(p))
+        got = read_gtfs_csv(spark, p)
+        assert got.columns == want.columns, name
+        assert got.collect() == want.collect(), name
+    assert read_gtfs_csv(spark, tmp_path / "bom.txt").columns \
+        == ["agency_id", "agency_name"]
+    empty = tmp_path / "empty.txt"
+    empty.write_bytes(b"")
+    with pytest.raises(ValueError, match="agency_id"):
+        ensure_columns(read_gtfs_csv(spark, empty),
+                       ["agency_id", "agency_name"])
+
+
+def test_semicolon_csv_maps_columns_by_name_in_every_file(spark, tmp_path):
+    """A file that lacks a middle column keeps each value under its own
+    name and has NULL in the absent column, whichever file comes
+    first."""
+    full = tmp_path / "a_full.csv"
+    full.write_text("st;temp;sun;dew\nGVE;1.0;5;-0.5\n", encoding="utf-8")
+    short = tmp_path / "b_short.csv"
+    short.write_text("st;temp;dew\nCOI;2.0;-0.7\n", encoding="utf-8")
+    for paths in ([full, short], [short, full]):
+        df = read_semicolon_csv(spark, paths, null_value="-")
+        assert df.columns == (["st", "temp", "sun", "dew"]
+                              if paths[0] is full
+                              else ["st", "temp", "dew", "sun"])
+        rows = {r.st: r.asDict() for r in df.collect()}
+        assert rows == {
+            "GVE": {"st": "GVE", "temp": "1.0", "sun": "5", "dew": "-0.5"},
+            "COI": {"st": "COI", "temp": "2.0", "sun": None, "dew": "-0.7"},
+        }
+        pruned = read_semicolon_csv(spark, paths, usecols=["dew", "sun"])
+        assert pruned.columns == ["dew", "sun"]
+        assert sorted(pruned.collect(), key=lambda r: r.dew) == \
+            [("-0.5", "5"), ("-0.7", None)]
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs ``fn`` ran) -- counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_readers_and_cli_run_no_extra_jobs(spark, tmp_path, capsys):
+    """Headers are read on the driver and the CLI reports the counts
+    its writes observed: no job runs outside the writes themselves."""
+    from tpg_weather_etl_spark.cli import main
+
+    z = _gtfs_zip(tmp_path)
+    with zipfile.ZipFile(z) as zf:
+        zf.extractall(tmp_path / "raw")
+    raw = tmp_path / "raw"
+    ist = _ist_csv(tmp_path, "ist.csv", [_ist_row()])
+    assert _jobs(spark, lambda: read_gtfs_csv(spark, raw / "stops.txt"))[1] \
+        == 0
+    assert _jobs(spark, lambda: read_semicolon_csv(
+        spark, [ist], usecols=list(IST_COLMAP)))[1] == 0
+    staged = {"feed_info": raw / "feed_info.txt"}
+    assert _jobs(spark, lambda: detect_feed_version(staged, "x_y")) \
+        == ("2024-02-15", 0)
+
+    counts, lib_jobs = _jobs(spark, lambda: ingest_gtfs(
+        spark, z, tmp_path / "staging", tmp_path / "wh"))
+    rc, cli_jobs = _jobs(spark, lambda: main(
+        ["--data-root", str(tmp_path / "data"), "ingest-gtfs",
+         "--zip", str(z)]))
+    assert rc == 0
+    assert cli_jobs == lib_jobs
+    printed = capsys.readouterr().out.splitlines()
+    assert printed == [f"{name}: {n} rows" for name, n in counts.items()]
 
 
 def test_staging_zip_and_encoding(tmp_path):

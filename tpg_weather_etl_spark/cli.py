@@ -69,10 +69,11 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "ingest-gtfs":
         from tpg_weather_etl_spark.ingest.gtfs import ingest_gtfs
-        out = ingest_gtfs(spark, args.zip, root / "staging" / "gtfs",
-                          root / "warehouse", operator_pattern=args.operator)
-        for name, df in out.items():
-            print(f"{name}: {df.count()} rows")
+        counts = ingest_gtfs(spark, args.zip, root / "staging" / "gtfs",
+                             root / "warehouse",
+                             operator_pattern=args.operator)
+        for name, n in counts.items():
+            print(f"{name}: {n} rows")
 
     elif args.cmd == "ingest-istdaten":
         from tpg_weather_etl_spark.ingest.istdaten import ingest_istdaten
@@ -89,9 +90,9 @@ def main(argv: list[str] | None = None) -> int:
         if not paths:
             print("no input files", file=sys.stderr)
             return 2
-        events = ingest_istdaten(spark, paths, root / "silver" / "ist",
-                                 operator_abbr=args.operator_abbr)
-        print(f"ist_events: {events.count()} rows")
+        n = ingest_istdaten(spark, paths, root / "silver" / "ist",
+                            operator_abbr=args.operator_abbr)
+        print(f"ist_events: {n} rows")
 
     elif args.cmd == "ingest-weather":
         from tpg_weather_etl_spark.ingest.weather import ingest_weather
@@ -100,9 +101,9 @@ def main(argv: list[str] | None = None) -> int:
         if not paths:
             print("no input files", file=sys.stderr)
             return 2
-        obs = ingest_weather(spark, paths, root / "silver" / "weather",
-                             warehouse_path=root / "warehouse" / "weather_obs")
-        print(f"weather_obs: {obs.count()} rows")
+        n = ingest_weather(spark, paths, root / "silver" / "weather",
+                           warehouse_path=root / "warehouse" / "weather_obs")
+        print(f"weather_obs: {n} rows")
 
     elif args.cmd == "build-features":
         from tpg_weather_etl_spark.features.events import (
@@ -143,9 +144,8 @@ def main(argv: list[str] | None = None) -> int:
         feats = spark.read.parquet(str(root / "gold" / "features_events"))
         weather = spark.read.parquet(str(root / "warehouse" / "weather_obs"))
         rows = build_training_rows(feats, weather)
-        write_parquet(rows, root / "gold" / "feature_training_row")
-        print(f"feature_training_row: "
-              f"{spark.read.parquet(str(root / 'gold' / 'feature_training_row')).count()} rows")
+        n = write_parquet(rows, root / "gold" / "feature_training_row")
+        print(f"feature_training_row: {n} rows")
 
     elif args.cmd == "curate-corpus":
         # the end-to-end training-data curation pipeline, composed
@@ -168,9 +168,7 @@ def main(argv: list[str] | None = None) -> int:
         curated = (d.join(quality_ids, "doc_id", "left_semi")
                     .join(dedup_ids, "doc_id", "left_semi"))
         out_dir = Path(args.out)
-        write_parquet(curated, out_dir / "curated_documents")
-        n_out = spark.read.parquet(
-            str(out_dir / "curated_documents")).count()
+        n_out = write_parquet(curated, out_dir / "curated_documents")
         stats = {
             "docs_in": n_in,
             "quality_pass": quality_ids.count(),

@@ -124,13 +124,14 @@ def ingest_istdaten(
     csv_paths: Sequence[str | Path],
     silver_path: str | Path,
     operator_abbr: str = "TPG",
-) -> DataFrame:
+) -> int:
     """Full pipeline: CSV shards → normalize → dedupe → month-silver.
 
-    One lazy plan; the month partition overwrite only rewrites months
-    present in this batch (K5 semantics).
+    One lazy plan, run once by its write; the month partition
+    overwrite only rewrites months present in this batch (K5
+    semantics). Returns the event rows written.
     """
     raw = read_semicolon_csv(spark, csv_paths, usecols=list(IST_COLMAP))
     events = dedupe_istdaten(normalize_istdaten(raw, operator_abbr))
-    write_month_partitioned(events, silver_path, date_col="service_date")
-    return events
+    return write_month_partitioned(events, silver_path,
+                                   date_col="service_date")

@@ -70,13 +70,13 @@ def ingest_weather(
     csv_paths: Sequence[str | Path],
     silver_path: str | Path,
     warehouse_path: str | Path | None = None,
-) -> DataFrame:
-    """CSV → normalize → dedupe → silver K1 (+ optional K6 upsert)."""
+) -> int:
+    """CSV → normalize → dedupe → silver K1 (+ optional K6 upsert).
+    Returns the observation rows written to silver."""
     raw = read_semicolon_csv(spark, csv_paths,
                              usecols=list(WEATHER_COLMAP), null_value="-")
-    obs = dedupe_weather(normalize_weather(raw))
-    write_parquet(obs, silver_path)
+    rows = write_parquet(dedupe_weather(normalize_weather(raw)), silver_path)
     if warehouse_path is not None:
         upsert_station_range(spark, warehouse_path,
                              spark.read.parquet(str(silver_path)))
-    return obs
+    return rows

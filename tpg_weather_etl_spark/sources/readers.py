@@ -1,20 +1,53 @@
 """CSV / parquet readers (reference S5-S9).
 
-All readers hand Spark an explicit all-string schema or header-driven
-schema plus options — never inferSchema (a full extra pass at scale).
-Type coercion happens downstream in the normalize steps, mirroring the
-reference's dtype=str reads (02_ingest_istdaten.py:190) with final
-casts at load (02:429-445).
+CSV readers take each file's header line on the driver (the staged
+files are local there), build an explicit all-string ``StructType``
+from it and hand Spark that schema -- never inferSchema (a full extra
+pass at scale) and no header-inference job: nothing runs before the
+scan itself. Files are mapped to columns by name: files are grouped by
+header, each group is read with its own schema, and the groups are
+combined with ``unionByName``, so a file that lacks a column gets NULLs
+there instead of its neighbours' values shifted into it. Type coercion
+happens downstream in the normalize steps, mirroring the reference's
+dtype=str reads (02_ingest_istdaten.py:190) with final casts at load
+(02:429-445).
 """
 
 from __future__ import annotations
 
+import csv
 from collections.abc import Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _csv_header(path: str | Path, sep: str = ",",
+               null_value: str | None = None) -> tuple[str, ...]:
+    """Column names of a local CSV file's first non-blank line, as
+    Spark's ``header`` option names them: UTF-8 with a leading BOM
+    stripped, empty (or ``null_value``) names become ``_c<i>``, and
+    names that repeat case-insensitively get their position appended.
+    An empty file has no columns."""
+    with open(path, encoding="utf-8-sig", errors="replace",
+              newline="") as fh:
+        row = next((r for r in csv.reader(fh, delimiter=sep) if r), [])
+    seen = [n.lower() for n in row]
+    return tuple(
+        f"_c{i}" if n in ("", null_value)
+        else f"{n}{i}" if seen.count(n.lower()) > 1
+        else n
+        for i, n in enumerate(row))
+
+
+def _string_schema(cols: Sequence[str]) -> T.StructType:
+    return T.StructType([T.StructField(c, T.StringType()) for c in cols])
+
+
+def _empty(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], T.StructType([]))
 
 
 def read_semicolon_csv(
@@ -25,30 +58,48 @@ def read_semicolon_csv(
 ) -> DataFrame:
     """Semicolon CSV, all columns string (ref S5/S6).
 
-    ``usecols`` prunes immediately after parse — with an explicit
-    select Catalyst drops unparsed columns from the CSV reader
-    (column pruning X1). ``null_value`` handles the weather '-'
+    ``paths`` are local files. Each distinct header is read as one
+    scan with its own schema; a column absent from some files is NULL
+    on their rows. ``usecols`` prunes immediately after parse -- with
+    an explicit select Catalyst drops unparsed columns from the CSV
+    reader (column pruning X1). ``null_value`` handles the weather '-'
     sentinel (03_ingest_weather.py:77).
     """
-    reader = (
-        spark.read.option("sep", ";")
-        .option("header", "true")
-        .option("encoding", "UTF-8")
-        .option("mode", "PERMISSIVE")
-    )
-    if null_value is not None:
-        reader = reader.option("nullValue", null_value)
-    df = reader.csv([str(p) for p in paths])
-    if usecols:
-        present = [c for c in usecols if c in df.columns]
-        df = df.select(*present)
-    return df
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for p in paths:
+        header = _csv_header(p, ";", null_value)
+        if header:
+            groups.setdefault(header, []).append(str(p))
+    if not groups:
+        return _empty(spark)
+    names = list(dict.fromkeys(c for h in groups for c in h))
+    cols = [c for c in usecols if c in names] if usecols else names
+    df = None
+    for header, group in groups.items():
+        reader = (
+            spark.read.schema(_string_schema(header))
+            .option("sep", ";")
+            .option("header", "true")
+            .option("encoding", "UTF-8")
+            .option("mode", "PERMISSIVE")
+        )
+        if null_value is not None:
+            reader = reader.option("nullValue", null_value)
+        part = reader.csv(group).select(*[c for c in cols if c in header])
+        df = part if df is None else df.unionByName(
+            part, allowMissingColumns=True)
+    return df.select(*cols)
 
 
 def read_gtfs_csv(spark: SparkSession, path: str | Path) -> DataFrame:
-    """Comma CSV with header, all-string (GTFS member, ref S1)."""
+    """Comma CSV with header, all-string (GTFS member, ref S1); ``path``
+    is a local file. An empty file gives a frame with no columns."""
+    header = _csv_header(path)
+    if not header:
+        return _empty(spark)
     return (
-        spark.read.option("header", "true")
+        spark.read.schema(_string_schema(header))
+        .option("header", "true")
         .option("encoding", "UTF-8")
         .csv(str(path))
     )

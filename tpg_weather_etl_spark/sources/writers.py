@@ -24,51 +24,62 @@ go through ``replace_partitions`` (dynamic partition overwrite set on
 the writer), every other parquet sink through ``write_parquet``
 (static: the whole target is replaced). No writer touches session
 conf, so the result does not depend on how the session was created.
+
+Both return the number of rows written. The count is an
+``Observation`` on the written DataFrame, filled in by the write job
+itself, so callers never re-run a plan just to report its size.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tpg_weather_etl_spark.functions.time import month_key
 
 
-def _parquet_writer(df: DataFrame, partition_by: str | list[str] | None,
-                    overwrite_mode: str) -> DataFrameWriter:
-    """zstd matches the reference gold outputs
+def _write_counted(df: DataFrame, path: str | Path,
+                   partition_by: str | list[str] | None,
+                   overwrite_mode: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the rows
+    written. zstd matches the reference gold outputs
     (10_build_features.py:294)."""
-    w = (df.write.mode("overwrite")
+    rows = Observation()
+    w = (df.observe(rows, F.count(F.lit(1)).alias("n")).write
+         .mode("overwrite")
          .option("compression", "zstd")
          .option("partitionOverwriteMode", overwrite_mode))
-    return w.partitionBy(partition_by) if partition_by else w
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(str(path))
+    return rows.get["n"]
 
 
 def write_parquet(df: DataFrame, path: str | Path,
-                  partition_by: str | list[str] | None = None) -> None:
+                  partition_by: str | list[str] | None = None) -> int:
     """Parquet sink (K1/K3) that replaces the whole target, including
-    partitions absent from ``df``."""
-    _parquet_writer(df, partition_by, "static").parquet(str(path))
+    partitions absent from ``df``. Returns the rows written."""
+    return _write_counted(df, path, partition_by, "static")
 
 
 def replace_partitions(df: DataFrame, path: str | Path,
-                       partition_by: str | list[str]) -> None:
+                       partition_by: str | list[str]) -> int:
     """Partitioned parquet sink that replaces only the partition values
     present in ``df``; every other partition under ``path`` survives
-    (K2/K4/K5)."""
-    _parquet_writer(df, partition_by, "dynamic").parquet(str(path))
+    (K2/K4/K5). Returns the rows written."""
+    return _write_counted(df, path, partition_by, "dynamic")
 
 
 def write_month_partitioned(
     df: DataFrame,
     path: str | Path,
     date_col: str = "service_date",
-) -> None:
+) -> int:
     """Hive-style ``month=YYYY-MM/`` sink (K2+K5). Only months present
-    in ``df`` are replaced."""
-    replace_partitions(df.withColumn("month", month_key(F.col(date_col))),
+    in ``df`` are replaced. Returns the rows written."""
+    return replace_partitions(df.withColumn("month", month_key(F.col(date_col))),
                        path, "month")
 
 
